@@ -1,23 +1,49 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Beyond the reference surface (BASELINE.json north star): approximate
-nearest-neighbor search for training-data pipelines.
+Beyond the reference surface (BASELINE.json north star): nearest-neighbor
+search, near-duplicate detection and dimensionality reduction for
+training-data pipelines. Ten operators:
 
-- :func:`cosine_topk_bruteforce` — the exact baseline: block-nested-loop
-  cross join + JVM-side dot product (``aggregate``/``zip_with`` higher-order
-  functions — no Python in the loop), then per-query top-k via window.
-- :func:`lsh_bucketed_topk` — the scale path: random-hyperplane LSH buckets
-  candidates first so the join is bucket-local instead of full N×M.
-  At 100 TB / billions of vectors this is the difference between a
-  broadcast-bucket join and an impossible quadratic shuffle.
+- exact top-k: :func:`cosine_topk_bruteforce` (the pure-JVM reference —
+  cross join + ``aggregate``/``zip_with`` dot product, window rank) and
+  :func:`cosine_topk_blas` (BLAS matmuls over a broadcast or hash-sharded
+  corpus);
+- approximate top-k: :func:`lsh_bucketed_topk` (random-hyperplane
+  buckets), :func:`ivf_topk` (k-means inverted lists), :func:`int8_topk`
+  and :func:`pq_topk` (compressed approximate pass + exact rerank);
+- threshold pairs: :func:`cosine_neardup_pairs` (exact) and
+  :func:`lsh_neardup_pairs` (bucket-prefiltered);
+- :func:`semantic_dedup` (SemDeDup cluster dedup) and
+  :func:`random_projection` (Johnson-Lindenstrauss projection).
 
-Vectors are L2-normalized once up front (cosine = dot of normals).
+One contract everywhere: vectors are L2-normalized (cosine = dot of unit
+vectors; a zero vector stays zero and scores 0), the score is rounded to
+``round_digits``, and neighbors rank by (score DESC, id ASC) — a total
+order, so every top-k is unique and per-partition top-k lists reduce
+exactly to the global one.
+
+Every numpy path scores through the same private kernels:
+
+- :func:`_round` — the only rounding site: half away from zero on the
+  scaled value (C ``round``), which is what DuckDB's ``ROUND(double, d)``
+  does. ``np.round`` rounds half to even and disagrees on exact halves.
+- :func:`_topk` — exact, tie-safe per-row top-k under (score DESC, id ASC).
+- :func:`_rerank_topk` — approximate-score candidate cut + exact rerank.
+- :func:`_pairs` — above-threshold pairs of a score block.
+- :func:`_assign_lists` — nearest-centroid list assignment (IVF,
+  SemDeDup, the streaming ANN index).
+- :func:`_broadcast_score` / :func:`_dense_topk` — the broadcast-or-shard
+  driver; :func:`_cogroup_topk` + :func:`_window_topk` — per-group BLAS
+  scoring and the global rank reduce.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+_TOPK_SCHEMA = "qid long, cid long, cosine double"
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -49,36 +75,216 @@ def normalize(df: DataFrame, vec_col: str, out_col: str = "__nvec") -> DataFrame
     ).drop("__l2n")
 
 
-def _safe_unit_rows(M):
-    """L2-normalize matrix rows in place; zero vectors stay zero instead of
-    becoming NaN (guarded divide — a zero-norm row scores 0 with everything)."""
-    import numpy as np
+# ---------------------------------------------------------------------------
+# numpy kernels
+# ---------------------------------------------------------------------------
 
+
+def _matrix(vectors) -> np.ndarray:
+    """Stack array cells (an Arrow list column or collected lists) into a
+    float64 row matrix."""
+    return np.array(list(vectors), dtype=np.float64)
+
+
+def _safe_unit_rows(M):
+    """L2-normalize matrix rows; zero vectors stay zero instead of
+    becoming NaN (guarded divide — a zero-norm row scores 0 with everything)."""
     n = np.linalg.norm(M, axis=1, keepdims=True)
     n[n == 0] = 1.0
     return M / n
 
 
-def _shard_cogroup_topk(
+def _round(S, digits: int):
+    """Round half away from zero on the scaled value — C ``round``, which
+    is what DuckDB's ``ROUND(double, d)`` computes — so a score exactly on
+    a half rounds like the oracle. ``np.round`` alone rounds half to even;
+    the exact halves it moved toward zero are moved away again (``y - r``
+    is exact, so no other value changes — unlike ``floor(|y| + 0.5)``,
+    which rounds 0.49999999999999994 up to 1)."""
+    y = S * 10.0**digits
+    r = np.round(y)
+    d = y - r
+    half = np.abs(d, out=d) == 0.5
+    r[half] = y[half] + np.copysign(0.5, y[half])
+    r /= 10.0**digits
+    return r
+
+
+def _topk(S, qids, cids, k: int, exclude_self: bool):
+    """Exact per-row top-k of a rounded score block under (score DESC,
+    cid ASC). ``cids`` labels the columns: one id row shared by every
+    row, or a per-row id block. Every score tied with a row's k-th best
+    stays a candidate until the final sort, so a tie at the cut never
+    picks arbitrary ids. Returns (qid, cid, score, rank) arrays; masked
+    self pairs and non-finite scores are never emitted."""
+    cids = np.broadcast_to(cids, S.shape)
+    if exclude_self:
+        S = np.where(cids == qids[:, None], -np.inf, S)
+    kk = min(k, S.shape[1])
+    kth = -np.partition(-S, kk - 1, axis=1)[:, kk - 1]  # NaN sorts last
+    rows, cols = np.nonzero(~(S < kth[:, None]))  # a NaN k-th keeps the row
+    s, c = S[rows, cols], cids[rows, cols]
+    order = np.lexsort((c, -s, rows))
+    rows, s, c = rows[order], s[order], c[order]
+    rank = np.arange(len(rows)) - np.searchsorted(rows, rows) + 1
+    keep = (rank <= kk) & np.isfinite(s)
+    return qids[rows[keep]], c[keep], s[keep], rank[keep]
+
+
+def _rerank_topk(S_approx, Q, C, qids, cids, k, n_cand, digits, exclude_self):
+    """Approximate-score candidate cut + exact rerank: each query keeps its
+    ``n_cand`` best approximate scores (self masked first), the survivors
+    are rescored against the fp64 unit rows ``C`` and ranked by
+    :func:`_topk` — exact whenever the true top-k survives the cut."""
+    if exclude_self:
+        S_approx = np.where(cids[None, :] == qids[:, None], -np.inf, S_approx)
+    n_cand = min(len(cids), n_cand)
+    cand = np.argpartition(-S_approx, n_cand - 1, axis=1)[:, :n_cand]
+    exact = (C[cand] @ Q[:, :, None])[:, :, 0]
+    return _topk(_round(exact, digits), qids, cids[cand], k, exclude_self)
+
+
+def _pairs(S, ida, idb, threshold: float, upper: bool = True):
+    """(id_a, id_b, cosine) rows for the cells of a rounded score block at
+    or above ``threshold``. ``upper`` keeps only row id < column id (a
+    block scored against itself or the whole corpus: each unordered pair
+    once, no diagonal); otherwise — disjoint blocks, where every pair
+    appears exactly once — all hits are emitted as (min id, max id)."""
+    import pandas as pd
+
+    hit = S >= threshold
+    if upper:
+        hit &= ida[:, None] < idb[None, :]
+    ii, jj = np.nonzero(hit)
+    a, b = ida[ii], idb[jj]
+    if not upper:
+        a, b = np.minimum(a, b), np.maximum(a, b)
+    return pd.DataFrame({"id_a": a, "id_b": b, "cosine": S[ii, jj]})
+
+
+def _exact_block(k: int, digits: int, exclude_self: bool = True):
+    """Block scorer for unit rows: rounded ``Q @ C.T`` into :func:`_topk`
+    (extra arguments — an operator payload — are ignored)."""
+    return lambda Q, qids, C, cids, *_: _topk(
+        _round(Q @ C.T, digits), qids, cids, k, exclude_self
+    )
+
+
+# ---------------------------------------------------------------------------
+# Spark drivers around the kernels
+# ---------------------------------------------------------------------------
+
+
+def _window_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Global rank reduce: ``row_number`` over (cosine DESC, cid ASC) per
+    qid, top ``k`` kept."""
+    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("qid", "cid", "cosine", "rank")
+    )
+
+
+def _cogroup_topk(
+    q: DataFrame, c: DataFrame, key: str, k: int, score_block, schema: str = _TOPK_SCHEMA
+) -> DataFrame:
+    """Score each ``key`` group of queries (qid, qvec) against the same
+    group of corpus rows (cid, cvec) as ONE BLAS block inside a cogroup
+    ``applyInPandas``, then reduce with :func:`_window_topk`. Per-group
+    top-k under the total order contains the global top-k over the groups
+    a query meets, so the reduce is exact."""
+
+    def fn(_key, qpdf, cpdf):
+        import pandas as pd
+
+        if len(qpdf) == 0 or len(cpdf) == 0:
+            return pd.DataFrame(columns=["qid", "cid", "cosine"])
+        qid, cid, s, _ = score_block(
+            _matrix(qpdf["qvec"]), qpdf["qid"].to_numpy(),
+            _matrix(cpdf["cvec"]), cpdf["cid"].to_numpy(),
+        )
+        return pd.DataFrame({"qid": qid, "cid": cid, "cosine": s})
+
+    scored = q.groupBy(key).cogroup(c.groupBy(key)).applyInPandas(fn, schema)
+    return _window_topk(scored, k)
+
+
+def _broadcast_score(
+    queries: DataFrame,
+    corpus: DataFrame,
+    query_id: str,
+    corpus_id: str,
+    vec_col: str,
+    encode,
+    score,
+    schema: str,
+) -> DataFrame:
+    """Small-corpus strategy: collect the corpus as unit rows, broadcast
+    (cids, C, ``encode(C)``) and run ``score(Q, qids, C, cids, payload)``
+    — one BLAS matmul, returning a pandas frame — on every Arrow batch of
+    unit query rows inside ``mapInPandas`` (one BLAS call instead of 25M
+    interpreted array folds; 30 s → ~1 s at 5k×5k)."""
+    rows = corpus.select(corpus_id, vec_col).collect()
+    cids = np.array([r[0] for r in rows], dtype=np.int64)
+    C = _safe_unit_rows(_matrix(r[1] for r in rows))
+    sc = queries.sparkSession.sparkContext
+    bc = sc.broadcast((cids, C, encode(C)))
+
+    def fn(batches):
+        b_cids, b_C, payload = bc.value
+        for pdf in batches:
+            Q = _safe_unit_rows(_matrix(pdf["__vec"]))
+            yield score(Q, pdf["__qid"].to_numpy(), b_C, b_cids, payload)
+
+    prepared = queries.select(
+        F.col(query_id).alias("__qid"), F.col(vec_col).alias("__vec")
+    ).repartition(sc.defaultParallelism)
+    return prepared.mapInPandas(fn, schema)
+
+
+def _dense_topk(
     queries: DataFrame,
     corpus: DataFrame,
     query_id: str,
     corpus_id: str,
     vec_col: str,
     k: int,
-    n_shards: int,
-    score_shard,
+    broadcast_threshold: int,
+    shard_rows: int,
+    score,
+    encode=lambda C: None,
 ) -> DataFrame:
-    """Shared scale skeleton for exact/quantized dense top-k WITHOUT driver
-    materialization: corpus hashed into ``n_shards`` shards, queries
-    replicated to every shard via one ``explode(sequence(...))`` (the
-    block-nested-loop row replication — |Q|·n_shards rows, unavoidable for
-    exact scoring), cogroup on ``shard`` runs one BLAS matmul per
-    (query batch × corpus shard), per-shard top-k under the strict total
-    order (cosine DESC, cid ASC) provably contains the global top-k, and a
-    final window pass reduces. Driver memory O(1); per-task memory
-    O(shard_rows·dim + |Q|·dim). Same cogroup-per-partition pattern as
-    :func:`ivf_topk` — the IVF list assignment is replaced by a hash."""
+    """Broadcast-or-shard driver of the dense top-k operators. Each
+    operator supplies ``encode(C)`` (its corpus payload, built from unit
+    rows) and ``score(Q, qids, C, cids, payload)`` (:func:`_topk` arrays).
+
+    - **small corpus** (≤ ``broadcast_threshold`` rows, an explicit guard
+      — at 64-d fp64 the default 100k rows is ~50 MB):
+      :func:`_broadcast_score`; ranks are final per query.
+    - **large corpus**: NO driver materialization — the corpus is hashed
+      into ``ceil(n/shard_rows)`` shards, queries are replicated to every
+      shard via one ``explode(sequence(...))`` (the block-nested-loop row
+      replication — |Q|·n_shards rows, unavoidable for exact scoring) and
+      :func:`_cogroup_topk` scores each (query batch × shard) and reduces.
+      The payload is built per shard from per-vector quantities, so shard
+      boundaries cannot change any score. Driver memory O(1); per-task
+      memory O(shard_rows·dim + |Q|·dim).
+    """
+    n_corpus = corpus.count()
+    if n_corpus <= broadcast_threshold:
+        def score_frame(*args):
+            import pandas as pd
+
+            cols = ("qid", "cid", "cosine", "rank")
+            return pd.DataFrame(dict(zip(cols, score(*args))))
+
+        return _broadcast_score(
+            queries, corpus, query_id, corpus_id, vec_col, encode, score_frame,
+            _TOPK_SCHEMA + ", rank int",
+        )
+
+    n_shards = max(1, -(-n_corpus // shard_rows))
     c = corpus.select(
         F.pmod(F.hash(F.col(corpus_id)), F.lit(n_shards)).alias("shard"),
         F.col(corpus_id).alias("cid"),
@@ -89,17 +295,55 @@ def _shard_cogroup_topk(
         F.col(query_id).alias("qid"),
         F.col(vec_col).alias("qvec"),
     )
-    scored = (
-        q.groupBy("shard")
-        .cogroup(c.groupBy("shard"))
-        .applyInPandas(score_shard, "qid long, cid long, cosine double")
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "cid", "cosine", "rank")
-    )
+
+    def score_shard(Q, qids, C, cids):
+        C = _safe_unit_rows(C)
+        return score(_safe_unit_rows(Q), qids, C, cids, encode(C))
+
+    return _cogroup_topk(q, c, "shard", k, score_shard)
+
+
+def _assign_lists(
+    df: DataFrame, id_col: str, vec_col: str, centroids, n_probe: int
+) -> DataFrame:
+    """List-assign kernel: unit-normalize every vector (zero vectors stay
+    zero) and emit one ``(__id, list_id, __nvec)`` row for each of its
+    ``n_probe`` nearest centroids (ties to the lower list id) — top-1
+    for indexing, top-n_probe fan-out for queries."""
+    C = np.asarray(centroids, dtype=np.float64)
+
+    def fn(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            V = _safe_unit_rows(_matrix(pdf["__vec"]))
+            top = np.argsort(-(V @ C.T), axis=1, kind="stable")[:, :n_probe]
+            rows = np.repeat(np.arange(len(V)), top.shape[1])
+            yield pd.DataFrame(
+                {
+                    "__id": pdf["__id"].to_numpy()[rows],
+                    "list_id": top.ravel().astype(np.int32),
+                    "__nvec": list(V[rows]),
+                }
+            )
+
+    return df.select(
+        F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
+    ).mapInPandas(fn, "__id long, list_id int, __nvec array<double>")
+
+
+def _unit_sample(corpus: DataFrame, corpus_id: str, vec_col: str, n: int):
+    """Driver-side training sample: the first ``n`` vectors in id order
+    (stable across partitionings) as unit rows."""
+    rows = corpus.select(vec_col).orderBy(F.col(corpus_id)).limit(n).collect()
+    return _safe_unit_rows(_matrix(r[0] for r in rows))
+
+
+# ---------------------------------------------------------------------------
+# operators
+# ---------------------------------------------------------------------------
 
 
 def cosine_topk_bruteforce(
@@ -124,12 +368,7 @@ def cosine_topk_bruteforce(
         .filter(F.col("qid") != F.col("cid"))
         .select("qid", "cid", F.round(_dot(F.col("__qv"), F.col("__cv")), round_digits).alias("cosine"))
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "cid", "cosine", "rank")
-    )
+    return _window_topk(scored, k)
 
 
 def cosine_topk_blas(
@@ -146,85 +385,17 @@ def cosine_topk_blas(
 ) -> DataFrame:
     """Exact top-k cosine neighbors via blocked BLAS matmuls.
 
-    Two physical strategies behind one contract (score rounded to
-    ``round_digits``, rank by cosine DESC then corpus id ASC, top ``k`` —
-    identical to :func:`cosine_topk_bruteforce`):
-
-    - **small corpus** (≤ ``broadcast_threshold`` rows, an explicit guard —
-      at 64-d fp64 the default 100k rows is ~50 MB): collect + broadcast the
-      corpus matrix, one ``Q @ C.T`` per Arrow batch of queries inside
-      ``mapInPandas`` (one BLAS call instead of 25M interpreted array
-      folds; 30 s → ~1 s at 5k×5k).
-    - **large corpus**: NO driver materialization — the
-      :func:`_shard_cogroup_topk` skeleton (hash-sharded corpus, queries
-      replicated per shard, per-shard BLAS + top-k, global window reduce).
-      Corpus size stops bounding driver memory; per-task footprint is
-      ``shard_rows``·dim.
+    Same contract as :func:`cosine_topk_bruteforce` (score rounded to
+    ``round_digits``, rank by cosine DESC then corpus id ASC, top ``k``).
+    :func:`_dense_topk` picks the strategy: a broadcast corpus matrix
+    scored per Arrow batch of queries up to ``broadcast_threshold`` corpus
+    rows, hash shards of ``shard_rows`` rows above it (corpus size stops
+    bounding driver memory). Both score with :func:`_topk`.
     """
-    import numpy as np
-    import pandas as pd
-
-    n_corpus = corpus.count()
-    if n_corpus > broadcast_threshold:
-        def score_shard(_key, qpdf, cpdf):
-            if len(qpdf) == 0 or len(cpdf) == 0:
-                return pd.DataFrame({"qid": [], "cid": [], "cosine": []}).astype(
-                    {"qid": "int64", "cid": "int64", "cosine": "float64"}
-                )
-            Q = _safe_unit_rows(np.array([list(v) for v in qpdf["qvec"]], dtype=np.float64))
-            C = _safe_unit_rows(np.array([list(v) for v in cpdf["cvec"]], dtype=np.float64))
-            qids = qpdf["qid"].to_numpy()
-            cids = cpdf["cid"].to_numpy()
-            S = np.round(Q @ C.T, round_digits)
-            if exclude_self:
-                S = np.where(cids[None, :] == qids[:, None], -np.inf, S)
-            kk = min(k, S.shape[1])
-            order = np.lexsort((np.broadcast_to(cids, S.shape), -S), axis=1)[:, :kk]
-            rows = np.repeat(np.arange(S.shape[0]), kk)
-            cols = order.ravel()
-            keep = np.isfinite(S[rows, cols])
-            return pd.DataFrame(
-                {"qid": qids[rows[keep]], "cid": cids[cols[keep]], "cosine": S[rows[keep], cols[keep]]}
-            )
-
-        n_shards = max(1, -(-n_corpus // shard_rows))
-        return _shard_cogroup_topk(
-            queries, corpus, query_id, corpus_id, vec_col, k, n_shards, score_shard
-        )
-
-    rows = corpus.select(corpus_id, vec_col).collect()
-    cids = np.array([r[0] for r in rows], dtype=np.int64)
-    C = _safe_unit_rows(np.array([list(r[1]) for r in rows], dtype=np.float64))
-    spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast((cids, C))
-    buffer = min(len(cids), k + 128)  # tie-safety margin around the k-th score
-
-    def score(batches):
-        b_cids, b_C = bc.value
-        for pdf in batches:
-            Q = _safe_unit_rows(np.array([list(v) for v in pdf["__vec"]], dtype=np.float64))
-            S = np.round(Q @ b_C.T, round_digits)
-            qids = pdf["__qid"].to_numpy()
-            out_q, out_c, out_s, out_r = [], [], [], []
-            for i in range(S.shape[0]):
-                s = S[i]
-                if exclude_self:
-                    s = np.where(b_cids == qids[i], -np.inf, s)
-                cand = np.argpartition(-s, buffer - 1)[:buffer]
-                order = cand[np.lexsort((b_cids[cand], -s[cand]))][:k]
-                order = order[np.isfinite(s[order])]  # never emit masked self
-                out_q.extend([qids[i]] * len(order))
-                out_c.extend(b_cids[order])
-                out_s.extend(s[order])
-                out_r.extend(range(1, len(order) + 1))
-            yield pd.DataFrame(
-                {"qid": out_q, "cid": out_c, "cosine": out_s, "rank": out_r}
-            )
-
-    prepared = queries.select(
-        F.col(query_id).alias("__qid"), F.col(vec_col).alias("__vec")
-    ).repartition(spark.sparkContext.defaultParallelism)
-    return prepared.mapInPandas(score, "qid long, cid long, cosine double, rank int")
+    return _dense_topk(
+        queries, corpus, query_id, corpus_id, vec_col, k,
+        broadcast_threshold, shard_rows, _exact_block(k, round_digits, exclude_self),
+    )
 
 
 def _train_centroids(
@@ -239,19 +410,7 @@ def _train_centroids(
     (id-ordered limit ⇒ stable across partitionings; centroid count × dim
     floats — tiny). Shared coarse quantizer for IVF search and semantic
     dedup."""
-    import numpy as np
-
-    sample = np.array(
-        [
-            list(r[0])
-            for r in corpus.select(vec_col)
-            .orderBy(F.col(corpus_id))
-            .limit(max(n_lists * 32, 512))
-            .collect()
-        ],
-        dtype=np.float64,
-    )
-    sample = _safe_unit_rows(sample)
+    sample = _unit_sample(corpus, corpus_id, vec_col, max(n_lists * 32, 512))
     rng = np.random.RandomState(seed)
     centroids = sample[rng.choice(len(sample), n_lists, replace=False)]
     for _ in range(kmeans_iters):
@@ -281,7 +440,7 @@ def ivf_topk(
 
     Train: deterministic k-means on a seeded driver-side sample (centroid
     count × dim floats — tiny). Index: every corpus vector assigned to its
-    nearest centroid (one BLAS pass, broadcast centroids). Search: each
+    nearest centroid (one BLAS pass, :func:`_assign_lists`). Search: each
     query scores only the vectors in its ``n_probe`` nearest lists, then
     exact cosine re-rank with the same (cosine DESC, id ASC) contract as
     the exact path.
@@ -291,86 +450,19 @@ def ivf_topk(
     and the probe cogroup partition-prunes. Recall tuning = n_probe/n_lists.
 
     Scoring runs as ONE BLAS matmul per (list × cogroup batch) inside
-    ``applyInPandas`` over a cogroup on ``list_id`` — never as a row-level
-    pair join (an interpreted ``aggregate`` fold per candidate pair was
-    measured 25× slower at 2k×2k×64d). Per-list exact top-k under the
-    total order (cosine DESC, cid ASC) is kept per query; the union of
-    per-list top-k provably contains the global top-k over probed lists,
-    so a final window pass yields identical results to pair-join scoring.
+    :func:`_cogroup_topk` — never as a row-level pair join (an interpreted
+    ``aggregate`` fold per candidate pair was measured 25× slower at
+    2k×2k×64d).
     """
-    import numpy as np
-
-    spark = queries.sparkSession
     centroids = _train_centroids(
         corpus, corpus_id, vec_col, n_lists, kmeans_iters, seed
     )
-    bc = spark.sparkContext.broadcast(centroids)
-
-    def assign_lists(n_lists_probe: int):
-        import pandas as pd
-
-        def fn(batches):
-            C = bc.value
-            for pdf in batches:
-                V = np.array([list(v) for v in pdf["__vec"]], dtype=np.float64)
-                V /= np.linalg.norm(V, axis=1, keepdims=True)
-                S = V @ C.T
-                top = np.argsort(-S, axis=1)[:, :n_lists_probe]
-                out_id, out_list, out_vec = [], [], []
-                for i, vid in enumerate(pdf["__id"]):
-                    for c in top[i]:
-                        out_id.append(vid)
-                        out_list.append(int(c))
-                        out_vec.append(V[i].tolist())
-                yield pd.DataFrame({"__id": out_id, "list_id": out_list, "__nvec": out_vec})
-
-        return fn
-
-    assigned = (
-        corpus.select(F.col(corpus_id).alias("__id"), F.col(vec_col).alias("__vec"))
-        .mapInPandas(assign_lists(1), "__id long, list_id int, __nvec array<double>")
-        .withColumnsRenamed({"__id": "cid", "__nvec": "cvec"})
-    )
-    probes = (
-        queries.select(F.col(query_id).alias("__id"), F.col(vec_col).alias("__vec"))
-        .mapInPandas(assign_lists(n_probe), "__id long, list_id int, __nvec array<double>")
-        .withColumnsRenamed({"__id": "qid", "__nvec": "qvec"})
-    )
-
-    def score_list(_key, qpdf, cpdf):
-        import pandas as pd
-
-        if len(qpdf) == 0 or len(cpdf) == 0:
-            return pd.DataFrame({"qid": [], "cid": [], "cosine": []}).astype(
-                {"qid": "int64", "cid": "int64", "cosine": "float64"}
-            )
-        Q = np.array([list(v) for v in qpdf["qvec"]], dtype=np.float64)
-        C = np.array([list(v) for v in cpdf["cvec"]], dtype=np.float64)
-        qids = qpdf["qid"].to_numpy()
-        cids = cpdf["cid"].to_numpy()
-        S = np.round(Q @ C.T, round_digits)
-        S = np.where(cids[None, :] == qids[:, None], -np.inf, S)  # exclude self
-        kk = min(k, S.shape[1])
-        # exact per-list top-k under (cosine DESC, cid ASC): total order ⇒
-        # union over probed lists contains the global top-k.
-        order = np.lexsort((np.broadcast_to(cids, S.shape), -S), axis=1)[:, :kk]
-        rows = np.repeat(np.arange(S.shape[0]), kk)
-        cols = order.ravel()
-        keep = np.isfinite(S[rows, cols])
-        return pd.DataFrame(
-            {"qid": qids[rows[keep]], "cid": cids[cols[keep]], "cosine": S[rows[keep], cols[keep]]}
-        )
-
-    scored = (
-        probes.groupBy("list_id")
-        .cogroup(assigned.groupBy("list_id"))
-        .applyInPandas(score_list, "qid long, cid long, cosine double")
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "cid", "cosine", "rank")
+    probes = _assign_lists(queries, query_id, vec_col, centroids, n_probe)
+    assigned = _assign_lists(corpus, corpus_id, vec_col, centroids, 1)
+    return _cogroup_topk(
+        probes.withColumnsRenamed({"__id": "qid", "__nvec": "qvec"}),
+        assigned.withColumnsRenamed({"__id": "cid", "__nvec": "cvec"}),
+        "list_id", k, _exact_block(k, round_digits),
     )
 
 
@@ -386,10 +478,10 @@ def cosine_neardup_pairs(
     """Embedding-cosine near-duplicate pairs: all (a < b) with
     round(cosine, round_digits) >= threshold.
 
-    - **small corpus** (≤ ``broadcast_threshold`` rows): broadcast +
-      blocked-BLAS like :func:`cosine_topk_blas` — one matmul per Arrow
-      batch, emit only above-threshold pairs, so the output (not the O(n²)
-      score matrix) is what hits the network.
+    - **small corpus** (≤ ``broadcast_threshold`` rows):
+      :func:`_broadcast_score` like :func:`cosine_topk_blas` — one matmul
+      per Arrow batch, emit only above-threshold pairs, so the output (not
+      the O(n²) score matrix) is what hits the network.
     - **large corpus**: block-pair grouping, no driver materialization.
       Rows are hashed into B = ceil(n/block_rows) blocks; each row is
       replicated to the B groups keyed (min(b,o), max(b,o)) — every
@@ -402,89 +494,47 @@ def cosine_neardup_pairs(
       (:func:`lsh_bucketed_topk` buckets / MinHash-LSH) and reserve this
       operator for in-bucket verification.
     """
-    import numpy as np
-    import pandas as pd
-
     n = df.count()
-    if n > broadcast_threshold:
-        n_blocks = max(1, -(-n // block_rows))
-        base = df.select(
-            F.pmod(F.hash(F.col(id_col)), F.lit(n_blocks)).alias("blk"),
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).alias("__vec"),
-        )
-        grouped = base.select(
-            "blk",
-            "__id",
-            "__vec",
-            F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("other"),
-        ).select(
-            F.least("blk", "other").alias("glo"),
-            F.greatest("blk", "other").alias("ghi"),
-            "blk",
-            "__id",
-            "__vec",
+    if n <= broadcast_threshold:
+        return _broadcast_score(
+            df, df, id_col, id_col, vec_col, lambda C: None,
+            lambda Q, qids, C, cids, _: _pairs(
+                _round(Q @ C.T, round_digits), qids, cids, threshold
+            ),
+            "id_a long, id_b long, cosine double",
         )
 
-        def score_pair(key, pdf):
-            glo, ghi = key
-            A = pdf[pdf["blk"] == glo]
-            if glo == ghi:
-                B = A
-            else:
-                B = pdf[pdf["blk"] == ghi]
-            if len(A) == 0 or len(B) == 0:
-                return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
-                    {"id_a": "int64", "id_b": "int64", "cosine": "float64"}
-                )
-            MA = _safe_unit_rows(np.array([list(v) for v in A["__vec"]], dtype=np.float64))
-            MB = _safe_unit_rows(np.array([list(v) for v in B["__vec"]], dtype=np.float64))
-            ida = A["__id"].to_numpy()
-            idb = B["__id"].to_numpy()
-            S = np.round(MA @ MB.T, round_digits)
-            if glo == ghi:
-                # same matrix on both sides: id_a < id_b keeps each
-                # unordered pair once and kills the diagonal
-                mask = (S >= threshold) & (ida[:, None] < idb[None, :])
-                ii, jj = np.nonzero(mask)
-                a, b = ida[ii], idb[jj]
-            else:
-                # disjoint blocks: every pair appears exactly once here —
-                # emit all hits, canonicalized to (min id, max id)
-                ii, jj = np.nonzero(S >= threshold)
-                a = np.minimum(ida[ii], idb[jj])
-                b = np.maximum(ida[ii], idb[jj])
-            return pd.DataFrame({"id_a": a, "id_b": b, "cosine": S[ii, jj]})
+    n_blocks = max(1, -(-n // block_rows))
+    grouped = df.select(
+        F.pmod(F.hash(F.col(id_col)), F.lit(n_blocks)).alias("blk"),
+        F.col(id_col).alias("__id"),
+        F.col(vec_col).alias("__vec"),
+        F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("other"),
+    ).select(
+        F.least("blk", "other").alias("glo"),
+        F.greatest("blk", "other").alias("ghi"),
+        "blk",
+        "__id",
+        "__vec",
+    )
 
-        return grouped.groupBy("glo", "ghi").applyInPandas(
-            score_pair, "id_a long, id_b long, cosine double"
+    def score_pair(key, pdf):
+        import pandas as pd
+
+        glo, ghi = key
+        A, B = pdf[pdf["blk"] == glo], pdf[pdf["blk"] == ghi]
+        if len(A) == 0 or len(B) == 0:
+            return pd.DataFrame(columns=["id_a", "id_b", "cosine"])
+        MA = _safe_unit_rows(_matrix(A["__vec"]))
+        MB = _safe_unit_rows(_matrix(B["__vec"]))
+        S = _round(MA @ MB.T, round_digits)
+        return _pairs(
+            S, A["__id"].to_numpy(), B["__id"].to_numpy(), threshold, upper=glo == ghi
         )
 
-    rows = df.select(id_col, vec_col).collect()
-    cids = np.array([r[0] for r in rows], dtype=np.int64)
-    C = _safe_unit_rows(np.array([list(r[1]) for r in rows], dtype=np.float64))
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast((cids, C))
-
-    def score(batches):
-        b_cids, b_C = bc.value
-        for pdf in batches:
-            Q = _safe_unit_rows(np.array([list(v) for v in pdf["__vec"]], dtype=np.float64))
-            S = np.round(Q @ b_C.T, round_digits)
-            qids = pdf["__qid"].to_numpy()
-            out_a, out_b, out_s = [], [], []
-            for i in range(S.shape[0]):
-                mask = (S[i] >= threshold) & (b_cids > qids[i])  # a < b once
-                for j in np.nonzero(mask)[0]:
-                    out_a.append(qids[i])
-                    out_b.append(b_cids[j])
-                    out_s.append(S[i, j])
-            yield pd.DataFrame({"id_a": out_a, "id_b": out_b, "cosine": out_s})
-
-    prepared = df.select(
-        F.col(id_col).alias("__qid"), F.col(vec_col).alias("__vec")
-    ).repartition(spark.sparkContext.defaultParallelism)
-    return prepared.mapInPandas(score, "id_a long, id_b long, cosine double")
+    return grouped.groupBy("glo", "ghi").applyInPandas(
+        score_pair, "id_a long, id_b long, cosine double"
+    )
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -531,65 +581,29 @@ def lsh_bucketed_topk(
 
     dim = len(corpus.select(vec_col).first()[0])
     signature = _plane_signature(hyperplanes(dim, n_planes, seed))
+    qid_t = queries.schema[query_id].dataType.simpleString()
+    cid_t = corpus.schema[corpus_id].dataType.simpleString()
     # signature scoring (n_planes interpreted dot products per vector) is the
     # CPU-heavy stage — spread it across cores before computing
     queries = fan_out(queries.select(query_id, vec_col))
     corpus = fan_out(corpus.select(corpus_id, vec_col))
 
-    q = normalize(queries, vec_col, "__qv").select(
-        F.col(query_id).alias("qid"), "__qv", signature(F.col("__qv")).alias("bucket")
+    q = normalize(queries, vec_col, "qvec").select(
+        F.col(query_id).alias("qid"), "qvec", signature(F.col("qvec")).alias("bucket")
     )
-    c = normalize(corpus, vec_col, "__cv").select(
-        F.col(corpus_id).alias("cid"), "__cv", signature(F.col("__cv")).alias("bucket")
+    c = normalize(corpus, vec_col, "cvec").select(
+        F.col(corpus_id).alias("cid"), "cvec", signature(F.col("cvec")).alias("bucket")
     )
-
     # In-bucket scoring as one numpy matmul per bucket cogroup (r15,
     # guide §4.2): the bucket equi-join + interpreted zip_with/aggregate
     # dot per candidate pair was ~10 s of summed stage CPU at sf0.1.
     # Bucket assignment and normalization stay JVM-side and bit-identical
     # to the oracle; only the dot's accumulation order changes (BLAS vs
-    # left fold) — absorbed by round(·, round_digits) exactly as in
-    # cosine_topk_blas. Per-bucket top-k under the strict
-    # (cosine DESC, cid ASC) order is the global top-k (a query scores
-    # only within its own bucket).
-    import numpy as np
-    import pandas as pd
-
-    qid_t = queries.schema[query_id].dataType.simpleString()
-    cid_t = corpus.schema[corpus_id].dataType.simpleString()
-
-    def score_bucket(_key, qpdf, cpdf):
-        if len(qpdf) == 0 or len(cpdf) == 0:
-            return pd.DataFrame({"qid": [], "cid": [], "cosine": []})
-        Q = np.array([list(v) for v in qpdf["__qv"]], dtype=np.float64)
-        C = np.array([list(v) for v in cpdf["__cv"]], dtype=np.float64)
-        qids = qpdf["qid"].to_numpy()
-        cids = cpdf["cid"].to_numpy()
-        S = np.round(Q @ C.T, round_digits)
-        S = np.where(cids[None, :] == qids[:, None], -np.inf, S)
-        kk = min(k, S.shape[1])
-        order = np.lexsort((np.broadcast_to(cids, S.shape), -S), axis=1)[:, :kk]
-        rows = np.repeat(np.arange(S.shape[0]), kk)
-        cols = order.ravel()
-        keep = np.isfinite(S[rows, cols])
-        return pd.DataFrame(
-            {
-                "qid": qids[rows[keep]],
-                "cid": cids[cols[keep]],
-                "cosine": S[rows[keep], cols[keep]],
-            }
-        )
-
-    scored = (
-        q.groupBy("bucket")
-        .cogroup(c.groupBy("bucket"))
-        .applyInPandas(score_bucket, f"qid {qid_t}, cid {cid_t}, cosine double")
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "cid", "cosine", "rank")
+    # left fold) — absorbed by the rounding. A query scores only within
+    # its own bucket, so the per-bucket top-k is the global top-k.
+    return _cogroup_topk(
+        q, c, "bucket", k, _exact_block(k, round_digits),
+        f"qid {qid_t}, cid {cid_t}, cosine double",
     )
 
 
@@ -609,110 +623,41 @@ def int8_topk(
     """Quantized-score top-k with exact rerank — the memory-bound scale path.
 
     Corpus vectors are L2-normalized then symmetrically quantized to int8
-    (per-vector max-abs scale): 4× fewer broadcast/scan bytes than fp32,
-    8× vs the fp64 exact path. Scoring runs the approximate pass on the
-    int8 matrix (one integer-promoted matmul per Arrow batch), takes the
-    top ``k × rerank_factor`` candidates per query, then reranks ONLY those
-    against the fp64 originals — output semantics match
-    :func:`cosine_topk_blas` whenever the true top-k survives the candidate
-    cut (recall is pytest-asserted, and rises with ``rerank_factor``).
+    (per-vector max-abs scale): 4× fewer scan bytes than fp32, 8× vs the
+    fp64 exact path. Scoring runs the approximate pass on the int8 matrix
+    (one integer-promoted matmul per Arrow batch), takes the top
+    ``k × rerank_factor`` candidates per query, then reranks ONLY those
+    against the fp64 originals (:func:`_rerank_topk`) — output semantics
+    match :func:`cosine_topk_blas` whenever the true top-k survives the
+    candidate cut (recall is pytest-asserted, and rises with
+    ``rerank_factor``).
 
     At 10⁹ corpus vectors the approximate pass is what streams through
     memory/network, so its 4× compression is a direct 4× on the dominant
     cost; the rerank touches k·rerank_factor fp64 rows per query. Above
-    ``broadcast_threshold`` corpus rows the op switches to the
-    :func:`_shard_cogroup_topk` skeleton (quantization happens per shard —
-    the scale is per-VECTOR, so shard boundaries cannot change any score)
-    and the driver never holds the matrix.
+    ``broadcast_threshold`` corpus rows :func:`_dense_topk` shards the
+    corpus (the scale is per-VECTOR, so shard boundaries cannot change any
+    score) and the driver never holds the matrix.
     """
-    import numpy as np
-    import pandas as pd
+    n_cand = max(k * rerank_factor, k + 8)
 
-    def _quantize(C):
+    def quantize(C):
         scale = np.abs(C).max(axis=1, keepdims=True) / 127.0
         scale[scale == 0] = 1.0
         return np.floor(C / scale + 0.5).astype(np.int8), scale.ravel()
 
-    n_corpus = corpus.count()
-    n_cand_target = max(k * rerank_factor, k + 8)
-
-    if n_corpus > broadcast_threshold:
-        def score_shard(_key, qpdf, cpdf):
-            if len(qpdf) == 0 or len(cpdf) == 0:
-                return pd.DataFrame({"qid": [], "cid": [], "cosine": []}).astype(
-                    {"qid": "int64", "cid": "int64", "cosine": "float64"}
-                )
-            Q = _safe_unit_rows(np.array([list(v) for v in qpdf["qvec"]], dtype=np.float64))
-            C = _safe_unit_rows(np.array([list(v) for v in cpdf["cvec"]], dtype=np.float64))
-            cids = cpdf["cid"].to_numpy()
-            qids = qpdf["qid"].to_numpy()
-            C8, scale = _quantize(C)
-            S_approx = (Q.astype(np.float32) @ C8.astype(np.float32).T) * scale[None, :]
-            n_cand = min(len(cids), n_cand_target)
-            out_q, out_c, out_s = [], [], []
-            for i in range(S_approx.shape[0]):
-                s_a = S_approx[i]
-                if exclude_self:
-                    s_a = np.where(cids == qids[i], -np.inf, s_a)
-                cand = np.argpartition(-s_a, n_cand - 1)[:n_cand]
-                s_e = np.round(C[cand] @ Q[i], round_digits)
-                if exclude_self:
-                    s_e = np.where(cids[cand] == qids[i], -np.inf, s_e)
-                sel = np.lexsort((cids[cand], -s_e))[: min(k, len(cand))]
-                sel = sel[np.isfinite(s_e[sel])]
-                out_q.extend([qids[i]] * len(sel))
-                out_c.extend(cids[cand[sel]])
-                out_s.extend(s_e[sel])
-            return pd.DataFrame({"qid": out_q, "cid": out_c, "cosine": out_s})
-
-        n_shards = max(1, -(-n_corpus // shard_rows))
-        return _shard_cogroup_topk(
-            queries, corpus, query_id, corpus_id, vec_col, k, n_shards, score_shard
+    def score(Q, qids, C, cids, codes):
+        C8, scale = codes
+        # approximate scores: (Q @ C8.T) * scale  ==  Q @ C_quantized.T
+        approx = (Q.astype(np.float32) @ C8.astype(np.float32).T) * scale[None, :]
+        return _rerank_topk(
+            approx, Q, C, qids, cids, k, n_cand, round_digits, exclude_self
         )
 
-    rows = corpus.select(corpus_id, vec_col).collect()
-    cids = np.array([r[0] for r in rows], dtype=np.int64)
-    C = _safe_unit_rows(np.array([list(r[1]) for r in rows], dtype=np.float64))
-    C8, scale = _quantize(C)
-    spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast((cids, C8, scale, C))
-    n_cand = min(len(cids), n_cand_target)
-
-    def score(batches):
-        b_cids, b_C8, b_scale, b_C = bc.value
-        # int8 codes promoted once per executor; the broadcast itself stays 4x small
-        b_C8f = b_C8.astype(np.float32)
-        for pdf in batches:
-            Q = _safe_unit_rows(np.array([list(v) for v in pdf["__vec"]], dtype=np.float64))
-            # approximate scores: (Q @ C8.T) * scale  ==  Q @ C_quantized.T
-            S_approx = (Q.astype(np.float32) @ b_C8f.T) * b_scale[None, :]
-            qids = pdf["__qid"].to_numpy()
-            out_q, out_c, out_s, out_r = [], [], [], []
-            for i in range(S_approx.shape[0]):
-                s_a = S_approx[i]
-                if exclude_self:
-                    s_a = np.where(b_cids == qids[i], -np.inf, s_a)
-                cand = np.argpartition(-s_a, n_cand - 1)[:n_cand]
-                # exact rerank of the surviving candidates only; emit the
-                # MASKED reranked score so a surviving self row is dropped,
-                # never resurface with cosine ~1.0
-                s_e = np.round(b_C[cand] @ Q[i], round_digits)
-                if exclude_self:
-                    s_e = np.where(b_cids[cand] == qids[i], -np.inf, s_e)
-                sel = np.lexsort((b_cids[cand], -s_e))[: min(k, len(cand))]
-                sel = sel[np.isfinite(s_e[sel])]
-                out_q.extend([qids[i]] * len(sel))
-                out_c.extend(b_cids[cand[sel]])
-                out_s.extend(s_e[sel])
-                out_r.extend(range(1, len(sel) + 1))
-            yield pd.DataFrame(
-                {"qid": out_q, "cid": out_c, "cosine": out_s, "rank": out_r}
-            )
-
-    prepared = queries.select(
-        F.col(query_id).alias("__qid"), F.col(vec_col).alias("__vec")
-    ).repartition(queries.sparkSession.sparkContext.defaultParallelism)
-    return prepared.mapInPandas(score, "qid long, cid long, cosine double, rank int")
+    return _dense_topk(
+        queries, corpus, query_id, corpus_id, vec_col, k,
+        broadcast_threshold, shard_rows, score, quantize,
+    )
 
 
 def lsh_neardup_pairs(
@@ -745,22 +690,12 @@ def lsh_neardup_pairs(
     # §4.2 — same rationale and bit-robustness argument as
     # lsh_bucketed_topk: normalization and bucket signs stay JVM-side;
     # only the dot accumulation order changes, absorbed by the rounding).
-    import numpy as np
-    import pandas as pd
-
     id_t = df.schema[id_col].dataType.simpleString()
 
     def score_bucket(_key, pdf):
-        m = len(pdf)
-        if m < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        V = np.array([list(v) for v in pdf["__nv"]], dtype=np.float64)
+        V = _matrix(pdf["__nv"])
         ids = pdf["__id"].to_numpy()
-        S = np.round(V @ V.T, round_digits)
-        ia, ib = np.where((ids[:, None] < ids[None, :]) & (S >= threshold))
-        return pd.DataFrame(
-            {"id_a": ids[ia], "id_b": ids[ib], "cosine": S[ia, ib]}
-        )
+        return _pairs(_round(V @ V.T, round_digits), ids, ids, threshold)
 
     return n.groupBy("bucket").applyInPandas(
         score_bucket, f"id_a {id_t}, id_b {id_t}, cosine double"
@@ -799,26 +734,7 @@ def semantic_dedup(
     contract as the LSH ``max_bucket`` cap); at 100 TB raise ``n_lists``
     so E[cluster] = N/n_lists stays bounded.
     """
-    import numpy as np
-
-    spark = df.sparkSession
     centroids = _train_centroids(df, id_col, vec_col, n_lists, kmeans_iters, seed)
-    bc = spark.sparkContext.broadcast(centroids)
-
-    def assign(batches):
-        import pandas as pd
-
-        C = bc.value
-        for pdf in batches:
-            V = _safe_unit_rows(np.array([list(v) for v in pdf["__vec"]], dtype=np.float64))
-            lists = np.argmax(V @ C.T, axis=1).astype("int32")
-            yield pd.DataFrame(
-                {
-                    "__id": pdf["__id"],
-                    "list_id": lists,
-                    "__nvec": [v.tolist() for v in V],
-                }
-            )
 
     # (r15 negative result, measured: fan_out before the assign pass +
     # an explicit repartition(list_id) before applyInPandas — the §2.5
@@ -827,50 +743,36 @@ def semantic_dedup(
     # CPU is only ~1.6 s, under the cost of the extra exchanges. At
     # cluster scale the scan arrives pre-split and n_lists is raised, so
     # the single-task shape is a small-input artifact, not a scale risk.)
-    assigned = df.select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
-    ).mapInPandas(assign, "__id long, list_id int, __nvec array<double>")
+    assigned = _assign_lists(df, id_col, vec_col, centroids, 1)
 
     def dedup_cluster(key, pdf):
         import pandas as pd
 
         ids = pdf["__id"].to_numpy()
         n = len(ids)
-        if n > max_cluster:
-            return pd.DataFrame(
-                {
-                    "id": ids,
-                    "list_id": np.full(n, key[0], dtype="int32"),
-                    "kept": np.ones(n, dtype=bool),
-                    "dup_of": pd.array([None] * n, dtype="Int64"),
-                    "overflow": np.ones(n, dtype=bool),
-                }
-            )
-        order = np.argsort(ids, kind="stable")
-        V = np.array([list(v) for v in pdf["__nvec"]], dtype=np.float64)
-        S = np.round(V @ V.T, round_digits)
-        kept: list[int] = []
         dup_of = np.full(n, -1, dtype=np.int64)
-        for i in order:
-            if kept:
-                sims = S[i, kept]
-                j = int(np.argmax(sims))
-                if sims[j] >= tau:
-                    # best-scoring kept shadow, ties to the lowest id
-                    best = sims[j]
-                    cands = [kept[t] for t in range(len(kept)) if sims[t] == best]
-                    dup_of[i] = ids[min(cands, key=lambda t: ids[t])]
-                    continue
-            kept.append(i)
+        overflow = n > max_cluster
+        if not overflow:
+            V = _matrix(pdf["__nvec"])
+            S = _round(V @ V.T, round_digits)
+            kept: list[int] = []
+            for i in np.argsort(ids, kind="stable"):
+                if kept:
+                    sims = S[i, kept]
+                    j = int(np.argmax(sims))
+                    if sims[j] >= tau:
+                        # kept is in ascending id order, so argmax's first
+                        # maximum is the lowest-id best-scoring shadow
+                        dup_of[i] = ids[kept[j]]
+                        continue
+                kept.append(i)
         return pd.DataFrame(
             {
                 "id": ids,
                 "list_id": np.full(n, key[0], dtype="int32"),
                 "kept": dup_of == -1,
-                "dup_of": pd.array(
-                    [None if d == -1 else int(d) for d in dup_of], dtype="Int64"
-                ),
-                "overflow": np.zeros(n, dtype=bool),
+                "dup_of": pd.Series(dup_of, dtype="Int64").where(dup_of != -1),
+                "overflow": np.full(n, overflow),
             }
         )
 
@@ -936,19 +838,7 @@ def pq_train_codebooks(
     ``(m, k_codes, dim/m)`` float64 array, KBs even for billion-row
     corpora (the codebooks are sample-trained; encoding is distributed).
     """
-    import numpy as np
-
-    sample = np.array(
-        [
-            list(r[0])
-            for r in corpus.select(vec_col)
-            .orderBy(F.col(corpus_id))
-            .limit(max(k_codes * 64, 1024))
-            .collect()
-        ],
-        dtype=np.float64,
-    )
-    sample = _safe_unit_rows(sample)
+    sample = _unit_sample(corpus, corpus_id, vec_col, max(k_codes * 64, 1024))
     if sample.shape[0] < k_codes:
         raise ValueError(
             f"PQ training needs at least k_codes={k_codes} sample rows; "
@@ -1002,23 +892,20 @@ def pq_topk(
     per-vector dot product at all — the ADC trick); the top
     ``k × rerank_factor`` survivors rerank against the fp64 originals,
     exactly like :func:`int8_topk`. Codebooks are sample-trained once,
-    driver-side, deterministic; above ``broadcast_threshold`` the op
-    switches to the :func:`_shard_cogroup_topk` skeleton (codes computed
-    per shard from the SAME global codebooks, so shard boundaries cannot
-    change any score). Quality is contract-checked (recall vs the exact
-    top-k) rather than hash-matched — the candidate cut is float-order
-    sensitive by nature."""
-    import numpy as np
-    import pandas as pd
-
+    driver-side, deterministic; above ``broadcast_threshold``
+    :func:`_dense_topk` shards the corpus (codes computed per shard from
+    the SAME global codebooks, so shard boundaries cannot change any
+    score). Quality is contract-checked (recall vs the exact top-k)
+    rather than hash-matched — the candidate cut is float-order sensitive
+    by nature."""
     books = pq_train_codebooks(
         corpus, corpus_id, vec_col, m=m, k_codes=k_codes,
         kmeans_iters=kmeans_iters, seed=seed,
     )
     sub = books.shape[2]
-    n_cand_target = max(k * rerank_factor, k + 8)
+    n_cand = max(k * rerank_factor, k + 8)
 
-    def _encode(C):
+    def encode(C):
         codes = np.empty((len(C), m), dtype=np.uint8)
         for j in range(m):
             X = C[:, j * sub : (j + 1) * sub]
@@ -1026,80 +913,16 @@ def pq_topk(
             codes[:, j] = d2.argmin(axis=1)
         return codes
 
-    def _approx_scores(Q, codes):
+    def score(Q, qids, C, cids, codes):
         # ADC: T[j] = Q_sub @ books[j].T (b × k_codes); score = Σ_j T[j][code_j]
-        S = np.zeros((len(Q), len(codes)), dtype=np.float64)
+        approx = np.zeros((len(Q), len(codes)), dtype=np.float64)
         for j in range(m):
-            T = Q[:, j * sub : (j + 1) * sub] @ books[j].T
-            S += T[:, codes[:, j]]
-        return S
-
-    def _select(S_approx, Q, C, cids, qids):
-        out_q, out_c, out_s = [], [], []
-        n_cand = min(len(cids), n_cand_target)
-        for i in range(S_approx.shape[0]):
-            s_a = S_approx[i]
-            if exclude_self:
-                s_a = np.where(cids == qids[i], -np.inf, s_a)
-            cand = np.argpartition(-s_a, n_cand - 1)[:n_cand]
-            s_e = np.round(C[cand] @ Q[i], round_digits)
-            if exclude_self:
-                s_e = np.where(cids[cand] == qids[i], -np.inf, s_e)
-            sel = np.lexsort((cids[cand], -s_e))[: min(k, len(cand))]
-            sel = sel[np.isfinite(s_e[sel])]
-            out_q.extend([qids[i]] * len(sel))
-            out_c.extend(cids[cand[sel]])
-            out_s.extend(s_e[sel])
-        return out_q, out_c, out_s
-
-    n_corpus = corpus.count()
-
-    if n_corpus > broadcast_threshold:
-        def score_shard(_key, qpdf, cpdf):
-            if len(qpdf) == 0 or len(cpdf) == 0:
-                return pd.DataFrame({"qid": [], "cid": [], "cosine": []}).astype(
-                    {"qid": "int64", "cid": "int64", "cosine": "float64"}
-                )
-            Q = _safe_unit_rows(np.array([list(v) for v in qpdf["qvec"]], dtype=np.float64))
-            C = _safe_unit_rows(np.array([list(v) for v in cpdf["cvec"]], dtype=np.float64))
-            cids = cpdf["cid"].to_numpy()
-            qids = qpdf["qid"].to_numpy()
-            out_q, out_c, out_s = _select(_approx_scores(Q, _encode(C)), Q, C, cids, qids)
-            return pd.DataFrame({"qid": out_q, "cid": out_c, "cosine": out_s})
-
-        n_shards = max(1, -(-n_corpus // shard_rows))
-        return _shard_cogroup_topk(
-            queries, corpus, query_id, corpus_id, vec_col, k, n_shards, score_shard
+            approx += (Q[:, j * sub : (j + 1) * sub] @ books[j].T)[:, codes[:, j]]
+        return _rerank_topk(
+            approx, Q, C, qids, cids, k, n_cand, round_digits, exclude_self
         )
 
-    rows = corpus.select(corpus_id, vec_col).collect()
-    cids = np.array([r[0] for r in rows], dtype=np.int64)
-    C = _safe_unit_rows(np.array([list(r[1]) for r in rows], dtype=np.float64))
-    codes = _encode(C)
-    spark = queries.sparkSession
-    bc = spark.sparkContext.broadcast((cids, codes, C))
-
-    def score(batches):
-        b_cids, b_codes, b_C = bc.value
-        for pdf in batches:
-            Q = _safe_unit_rows(np.array([list(v) for v in pdf["__vec"]], dtype=np.float64))
-            qids = pdf["__qid"].to_numpy()
-            out_q, out_c, out_s = _select(
-                _approx_scores(Q, b_codes), Q, b_C, b_cids, qids
-            )
-            out_r = []
-            rank, prev = 0, None
-            for q in out_q:
-                rank = rank + 1 if q == prev else 1
-                prev = q
-                out_r.append(rank)
-            yield pd.DataFrame(
-                {"qid": out_q, "cid": out_c, "cosine": out_s, "rank": out_r}
-            )
-
-    prepared = queries.select(
-        F.col(query_id).alias("__qid"), F.col(vec_col).alias("__vec")
-    ).repartition(queries.sparkSession.sparkContext.defaultParallelism)
-    return prepared.mapInPandas(
-        score, "qid long, cid long, cosine double, rank int"
+    return _dense_topk(
+        queries, corpus, query_id, corpus_id, vec_col, k,
+        broadcast_threshold, shard_rows, score, encode,
     )

@@ -7472,11 +7472,16 @@ for _q in (
 
 # Queries whose Spark builder was RESTRUCTURED after their last driver
 # sampling (r14 two-level product_performance agg; r15 memo removal for
-# set_sim_join/bpe_fertility; r15 operator rewrites): their current shape
-# has never been driver-hash-verified, so they lead the window regardless
-# of green round. Remove an entry once a driver round re-greens it.
+# set_sim_join/bpe_fertility; r15 operator rewrites incl. the
+# hamming_neardup numpy pass; the similarity family moved onto the shared
+# scoring kernels and DuckDB's half-away-from-zero rounding): their
+# current shape has never been driver-hash-verified, so they lead the
+# window regardless of green round. Remove an entry once a driver round
+# re-greens it.
 _RESTRUCTURED_SINCE_GREEN = {
-    "product_performance", "set_sim_join", "bpe_fertility",
+    "product_performance", "set_sim_join", "bpe_fertility", "hamming_neardup",
+    "cosine_topk", "embedding_neardup", "ann_lsh", "embedding_neardup_lsh",
+    "ann_ivf", "ann_int8", "ann_pq", "semantic_dedup", "random_projection",
 }
 
 # the rule: 50 stalest greens over the FULL registry — a query the datum

@@ -21,9 +21,9 @@ production vector stores do:
 - **Search** (``ann_index_search``): assign queries to their ``n_probe``
   nearest lists, read ONLY those hive partitions of the index
   (``read(partition_values=...)`` prunes the file list before Spark sees
-  it), score with the same cogroup-BLAS kernel and (cosine DESC, id ASC)
-  contract as the batch path. At 4096 lists / 8 probes, a search touches
-  0.2% of the index files.
+  it), score with the same cogroup-BLAS kernel (``similarity._topk``)
+  and (cosine DESC, id ASC) contract as the batch path. At 4096 lists /
+  8 probes, a search touches 0.2% of the index files.
 - **Maintain**: the index is a plain ManifestTable, so OPTIMIZE-style
   compaction (``operators/gdpr.py::compact`` — partition-aware),
   deletion vectors (forget a vector without rewriting its list), vacuum
@@ -32,10 +32,13 @@ production vector stores do:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ecommerce_analytics_platform_spark.operators.similarity import (
+    _assign_lists,
+    _cogroup_topk,
+    _exact_block,
     _train_centroids,
 )
 from ecommerce_analytics_platform_spark.sources.manifest import ManifestTable
@@ -75,38 +78,6 @@ def load_quantizer(spark: SparkSession, path: str) -> list[list[float]]:
     return [list(r.centroid) for r in rows]
 
 
-def _assign_fn(centroids: list[list[float]], n_lists_probe: int):
-    """mapInPandas kernel: unit-normalize, argmax against the broadcast
-    quantizer, emit (id, list_id, normalized vec) — top-1 for ingest,
-    top-n_probe fan-out for queries."""
-
-    def fn(batches):
-        import numpy as np
-        import pandas as pd
-
-        C = np.array(centroids, dtype=np.float64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array([list(v) for v in pdf["__vec"]], dtype=np.float64)
-            norms = np.linalg.norm(V, axis=1, keepdims=True)
-            norms[norms == 0.0] = 1.0
-            V /= norms
-            S = V @ C.T
-            top = np.argsort(-S, axis=1)[:, :n_lists_probe]
-            out_id, out_list, out_vec = [], [], []
-            for i, vid in enumerate(pdf["__id"]):
-                for c in top[i]:
-                    out_id.append(vid)
-                    out_list.append(int(c))
-                    out_vec.append(V[i].tolist())
-            yield pd.DataFrame(
-                {"__id": out_id, "list_id": out_list, "__nvec": out_vec}
-            )
-
-    return fn
-
-
 def assign_to_lists(
     df: DataFrame,
     id_col: str,
@@ -114,12 +85,11 @@ def assign_to_lists(
     centroids: list[list[float]],
     n_lists_probe: int = 1,
 ) -> DataFrame:
-    return df.select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
-    ).mapInPandas(
-        _assign_fn(centroids, n_lists_probe),
-        "__id long, list_id int, __nvec array<double>",
-    )
+    """Unit-normalize and assign every vector to its ``n_lists_probe``
+    nearest quantizer lists (the shared batch IVF assignment): top-1 for
+    ingest, top-n_probe fan-out for queries. Rows are
+    ``(__id, list_id, __nvec)``."""
+    return _assign_lists(df, id_col, vec_col, centroids, n_lists_probe)
 
 
 def process_ann_batch(
@@ -212,41 +182,6 @@ def ann_index_search(
     needed = sorted({r.list_id for r in probes.select("list_id").distinct().collect()})
     corpus = index.read(partition_values={"list_id": needed})
 
-    def score_list(_key, qpdf, cpdf):
-        import numpy as np
-        import pandas as pd
-
-        if len(qpdf) == 0 or len(cpdf) == 0:
-            return pd.DataFrame({"qid": [], "cid": [], "cosine": []}).astype(
-                {"qid": "int64", "cid": "int64", "cosine": "float64"}
-            )
-        Q = np.array([list(v) for v in qpdf["qvec"]], dtype=np.float64)
-        C = np.array([list(v) for v in cpdf["cvec"]], dtype=np.float64)
-        qids = qpdf["qid"].to_numpy()
-        cids = cpdf["cid"].to_numpy()
-        S = np.round(Q @ C.T, round_digits)
-        S = np.where(cids[None, :] == qids[:, None], -np.inf, S)
-        kk = min(k, S.shape[1])
-        order = np.lexsort((np.broadcast_to(cids, S.shape), -S), axis=1)[:, :kk]
-        rows = np.repeat(np.arange(S.shape[0]), kk)
-        cols = order.ravel()
-        keep = np.isfinite(S[rows, cols])
-        return pd.DataFrame(
-            {
-                "qid": qids[rows[keep]],
-                "cid": cids[cols[keep]],
-                "cosine": S[rows[keep], cols[keep]],
-            }
-        )
-
-    scored = (
-        probes.groupBy("list_id")
-        .cogroup(corpus.groupBy("list_id"))
-        .applyInPandas(score_list, "qid long, cid long, cosine double")
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "cid", "cosine", "rank")
+    return _cogroup_topk(
+        probes, corpus, "list_id", k, _exact_block(k, round_digits)
     )

@@ -310,3 +310,157 @@ def test_pq_codebooks_deterministic(spark, emb):
     import numpy as np
 
     assert np.array_equal(b1, b2)  # id-ordered sample ⇒ partitioning-invariant
+
+
+def test_topk_ties_beyond_candidate_buffer(spark):
+    """More rows tie at the k-th score than any fixed candidate margin:
+    every corpus vector is identical, so all cosines round to 1.0 and the
+    (cosine DESC, cid ASC) order alone decides — the lowest ids other
+    than the query itself. Broadcast, sharded and brute-force paths must
+    all return exactly those."""
+    n = 300
+    corpus = spark.createDataFrame(
+        [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(n)],
+        "vec_id long, embedding array<double>",
+    ).cache()
+    queries = corpus.filter("vec_id IN (0, 1, 200)")
+    want = {
+        (q, rank): (c, 1.0)
+        for q in (0, 1, 200)
+        for rank, c in enumerate([i for i in range(n) if i != q][:3], start=1)
+    }
+    bl = cosine_topk_blas(queries, corpus, "vec_id", "vec_id", "embedding", k=3)
+    sh = cosine_topk_blas(queries, corpus, "vec_id", "vec_id", "embedding", k=3,
+                          broadcast_threshold=0, shard_rows=64)
+    bf = cosine_topk_bruteforce(queries, corpus, "vec_id", "vec_id", "embedding", k=3)
+    assert _key(bl.collect()) == want
+    assert _key(sh.collect()) == want
+    assert _key(bf.collect()) == want
+
+
+@pytest.mark.parametrize(
+    "x,digits",
+    [(0.125, 2), (-0.125, 2), (1.0005, 3), (0.00005, 4), (0.49999999999999994, 0)],
+)
+def test_round_matches_duckdb_at_boundaries(x, digits):
+    """The kernels' one rounding rule is DuckDB's ``ROUND(double, d)``:
+    half away from zero on the scaled value (``np.round`` gives 0.12 for
+    0.125 at 2 digits; DuckDB gives 0.13)."""
+    import duckdb
+    import numpy as np
+
+    from ecommerce_analytics_platform_spark.operators.similarity import _round
+
+    want = duckdb.sql(f"SELECT round({x!r}::DOUBLE, {digits})").fetchone()[0]
+    assert _round(np.array([x]), digits)[0] == want
+
+
+def test_round_matches_duckdb_on_seeded_grid():
+    import duckdb
+    import numpy as np
+
+    from ecommerce_analytics_platform_spark.operators.similarity import _round
+
+    rng = np.random.default_rng(20231)
+    x = np.round(rng.uniform(-1.0, 1.0, 4000), 5)  # many exact halves at 4 digits
+    for digits in (2, 3, 4):
+        got = duckdb.sql(
+            f"SELECT round(x, {digits}) AS r FROM (SELECT unnest($x)::DOUBLE AS x)",
+            params={"x": x.tolist()},
+        ).fetchnumpy()["r"]
+        assert np.array_equal(_round(x, digits), got), digits
+
+
+def test_ivf_zero_vector_query_gets_k_rows(spark, emb):
+    """A zero query scores cosine 0 against everything (the guarded
+    normalization every path shares) — k finite rows, the lowest probed
+    ids, never NaN scores that drop the query."""
+    import math
+
+    corpus = emb.select("vec_id", "embedding").limit(100).cache()
+    dim = len(corpus.first()["embedding"])
+    zero = spark.createDataFrame(
+        [(10**9, [0.0] * dim)], "vec_id long, embedding array<float>"
+    )
+    rows = ivf_topk(zero, corpus, "vec_id", "vec_id", "embedding", k=3,
+                    n_lists=4, n_probe=4).collect()
+    assert len(rows) == 3
+    assert all(math.isfinite(r["cosine"]) and r["cosine"] == 0.0 for r in rows)
+    lowest = sorted(r["vec_id"] for r in corpus.collect())[:3]
+    assert sorted(r["cid"] for r in rows) == lowest
+    exact = cosine_topk_blas(zero, corpus, "vec_id", "vec_id", "embedding", k=3)
+    assert _key(rows) == _key(exact.collect())
+
+
+def test_one_rounding_and_one_sort_site():
+    """Structural guard: the similarity family scores through one rounding
+    kernel and one top-k sort — copies of ``np.round`` / ``np.lexsort``
+    must not creep back into the operators."""
+    import ast
+    import os
+
+    import ecommerce_analytics_platform_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    counts = {"round": 0, "lexsort": 0}
+    for rel in ("operators/similarity.py", "streaming/annindex.py"):
+        with open(os.path.join(root, rel)) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and isinstance(node.func.value, ast.Name)
+                and node.func.value.id == "np"
+                and node.func.attr in counts
+            ):
+                counts[node.func.attr] += 1
+    assert counts == {"round": 1, "lexsort": 1}
+
+
+def test_topk_kernels_match_per_row_sort():
+    """The vectorized top-k and rerank kernels against a plain per-row
+    sort under (score DESC, cid ASC): coarse scores force ties at the
+    cut, and masked self pairs and NaN scores are never emitted."""
+    import numpy as np
+
+    from ecommerce_analytics_platform_spark.operators.similarity import (
+        _rerank_topk,
+        _round,
+        _safe_unit_rows,
+        _topk,
+    )
+
+    def ref(S, qids, cids, k, exclude_self):
+        out = []
+        for i, q in enumerate(qids):
+            row = [
+                (-s, c) for s, c in zip(S[i], cids[i] if cids.ndim == 2 else cids)
+                if np.isfinite(s) and not (exclude_self and c == q)
+            ]
+            out += [(q, c, -s, r) for r, (s, c) in enumerate(sorted(row)[:k], 1)]
+        return out
+
+    rng = np.random.default_rng(11)
+    for trial in range(60):
+        n, m, k = rng.integers(1, 20), rng.integers(1, 50), int(rng.integers(1, 8))
+        S = _round(rng.uniform(-1, 1, (n, m)), 1)
+        S[rng.random(S.shape) < 0.05] = np.nan
+        cids = rng.permutation(80)[:m]
+        qids = rng.choice(cids, n)
+        got = list(zip(*[a.tolist() for a in _topk(S, qids, cids, k, trial % 2 == 0)]))
+        assert got == ref(S, qids, cids, k, trial % 2 == 0), trial
+
+        # rerank: distinct approximate scores make the candidate set exact
+        C = _safe_unit_rows(rng.normal(size=(m, 8)))
+        Q = _safe_unit_rows(rng.normal(size=(n, 8)))
+        approx = Q @ C.T + rng.normal(scale=0.1, size=(n, m))
+        n_cand = int(rng.integers(1, m + 1))
+        want = []
+        for i, q in enumerate(qids):
+            a = np.where(cids == q, -np.inf, approx[i])
+            cand = np.argsort(-a, kind="stable")[:n_cand]
+            exact = _round(C[cand] @ Q[i], 3)[None, :]
+            want += ref(exact, qids[i : i + 1], cids[cand], k, True)
+        got = _rerank_topk(approx, Q, C, qids, cids, k, n_cand, 3, True)
+        assert list(zip(*[a.tolist() for a in got])) == want, trial
